@@ -2,14 +2,14 @@
 """DML STATEMENT-path cost at a scale decade (round 13, VERDICT r12
 #6): run sql_delete / sql_update / sql_merge_into STATEMENT shapes —
 the full front-door path (masked-text parse → predicate splice →
-``overwrite_pruned`` copy-on-write) — against a partitioned target
+``commit_staged`` copy-on-write) — against a partitioned target
 built from the x-tier orders and record BYTES WRITTEN vs table size,
 proving pruned-CoW IO ∝ touched partitions at a decade up.
 
 merge_apply (the engine face under MERGE) was measured in r9
 (merge_batch1/2 lanes); this measures the STATEMENT route on top of
 it: statement parsing, the DELETE/UPDATE predicate→touched-partition
-derivation, and the extracted overwrite_pruned — i.e. everything a
+derivation, and the staged commit — i.e. everything a
 pasted Trino script actually pays.
 
 Each statement's predicate confines affected rows to ONE of the five

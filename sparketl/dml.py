@@ -6,9 +6,8 @@ while a presto-ETL-tool user's scripts *lead* with ``INSERT INTO`` /
 ``CREATE TABLE AS`` / ``DELETE`` / ``UPDATE`` / ``MERGE INTO``.  This
 module parses that Trino statement-grammar subset and routes each
 statement to the engine machinery that already exists: parquet sinks
-(`sparketl.sources.connectors`) and pruned copy-on-write rewrite
-(`sparketl.operators.etl.overwrite_pruned` — the write-back extracted
-from ``merge_apply``).
+(`sparketl.sources.connectors`) and the staged copy-on-write commit
+(`sparketl.operators.etl.commit_staged`, shared with ``merge_apply``).
 
 Storage model
 =============
@@ -19,11 +18,30 @@ t (col type, ...)`` creates them EMPTY with the declared schema pinned
 (both optionally partitioned via the Trino/Hive ``WITH
 (partitioned_by = ARRAY['col'])`` property, and CTAS also takes the
 Trino column-NAME list ``CREATE TABLE t (a, b) AS <query>``);
-``register_table()`` adopts an existing parquet directory.  After
-every mutation the target is re-registered as a temp view (and the
-dialect schema cache cleared — the catalog exposes no version counter
-to observe), so subsequent statements and plain SELECTs through
-``dialect.sql()`` see the new state.
+``register_table()`` adopts an existing parquet directory.  A
+partitioned table is Spark's hive layout (``col=value`` directories);
+its empty state is one schema-bearing root file.
+
+Every write is staged: the statement writes the table's new contents
+into ``_stage-<table>-<uuid>`` beside the table directory (Spark and
+pyarrow listings skip it), then commits by renaming — staged partition
+directories replace the touched live ones, an unpartitioned table is
+swapped whole, and INSERT (like a MERGE's insert-only partitions)
+appends its files.  The plan never reads what it overwrites, so no
+statement materializes its input first, and affected-row counts come
+from jobs the statement runs anyway: DELETE and UPDATE count in the
+job that finds their touched partitions, INSERT and CTAS sum the
+written parquet footers, MERGE observes its write job.  A failure
+before the commit (including MERGE's one-source-row error) deletes
+the stage and leaves the table in its pre-state.  The commit is a
+sequence of renames, not one atomic step: a crash between the renames
+of a multi-partition commit can still leave a mix of old and new
+partitions — a manifest commit with compare-and-swap would close that
+window and is not built.  After every mutation the target is
+re-registered as a temp view (and the dialect schema cache cleared —
+the catalog exposes no version counter to observe), so subsequent
+statements and plain SELECTs through ``dialect.sql()`` see the new
+state.
 
 Namespaces (round 14, VERDICT r13 #2): ``CREATE SCHEMA`` creates a
 real Spark in-memory-catalog database, and every statement arm accepts
@@ -70,14 +88,17 @@ Scale
 =====
 Row-level DML on plain parquet is copy-on-write, exactly the
 Iceberg/Delta CoW shape at directory granularity: DELETE / UPDATE /
-MERGE against a PARTITIONED target rewrite only the partitions that
-contain touched rows (``overwrite_pruned`` — dynamic partition
-overwrite plus the emptied-partition/escaping guards merge_apply
-carries), while untouched directories are never read or rewritten.
+MERGE against a PARTITIONED target stage and swap only the partitions
+that contain touched rows (a MERGE: the partitions holding an ON
+match), while untouched directories are never read or rewritten; a
+touched partition left without rows loses its directory.
 Unpartitioned targets pay a full rewrite — the honest cost of
 row-level DML without a table format, stated loudly here rather than
-hidden.  INSERT is a pure append (new part files; no rewrite).
-Statement parsing is a driver-side string pass over the masked text —
+hidden.  INSERT is a pure append (new part files; no rewrite).  Each
+statement evaluates its query once, in its write job; DELETE / UPDATE
+/ partitioned MERGE add one partition-sized aggregate before it
+(broadcasts and AQE stages run as jobs of their own).  Statement
+parsing is a driver-side string pass over the masked text —
 O(statement length), zero executor cost.
 """
 
@@ -88,7 +109,7 @@ import re
 import weakref
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparketl import dialect as _d
@@ -447,7 +468,7 @@ def _refresh_catalog_table(spark: SparkSession, name: str, h: _Handle) -> None:
         )
         if part_fields:
             # SYNC both ADDS new partition directories and DROPS
-            # emptied ones (overwrite_pruned deletes emptied dirs)
+            # emptied ones (a commit removes emptied partition dirs)
             spark.sql(
                 f"msck repair table {_qident_sql(name)} sync partitions"
             )
@@ -788,42 +809,15 @@ def _display_name(name: str) -> str:
     return name
 
 
-def _checkpointed(df: DataFrame) -> DataFrame:
-    """Materialize before overwriting the directory the plan reads
-    from (same contract as merge_apply's rewrite frame)."""
-    return df.localCheckpoint(eager=True)
-
-
-def _reads_path(df: DataFrame, path: str) -> bool:
-    """True when ``df``'s plan scans any file under ``path`` —
-    driver-side metadata via ``inputFiles()`` (the analyzed plan's
-    file-source scans), no Spark job.  Conservative: returns True when
-    the file set cannot be determined."""
-    p = path[len("file:") :] if path.startswith("file:") else path
-    p = os.path.abspath(p)
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 - unknown source => assume it reads
-        return True
-    for f in files:
-        fp = f[len("file:") :] if f.startswith("file:") else f
-        fp = os.path.abspath(fp)
-        if fp == p or fp.startswith(p + os.sep):
-            return True
-    return False
-
-
 def _parquet_rows(path: str) -> int:
-    """Exact row count of the parquet table at ``path`` from the file
-    FOOTERS (pyarrow metadata read) — driver-side, no Spark job.  Used
-    by the write-first CTAS route, where the count job over a
-    checkpoint used to be the only reason the result was materialized
-    twice."""
+    """Exact row count of the parquet files under ``path`` from their
+    FOOTERS (pyarrow metadata read) — driver-side, no Spark job.  INSERT
+    counts its staged files and CTAS its new table this way, so each
+    evaluates its query once, straight into files."""
     import pyarrow.parquet as pq
 
-    p = path[len("file:") :] if path.startswith("file:") else path
     total = 0
-    for r, _, fs in os.walk(p):
+    for r, _, fs in os.walk(path.removeprefix("file:")):
         for f in fs:
             if f.endswith(".parquet"):
                 total += pq.read_metadata(os.path.join(r, f)).num_rows
@@ -832,33 +826,27 @@ def _parquet_rows(path: str) -> int:
 
 def _count_and_parts(
     df: DataFrame, part_col: str | None
-) -> tuple[int, set | None]:
+) -> tuple[int, dict | None]:
     """Affected-row count plus (for partitioned targets) the touched
-    partition-value set, in ONE Spark job (r15 job consolidation —
-    guide §1.2: at statement granularity the sequential small driver
-    actions ARE the wall; the per-partition counts the write-back
-    needs anyway carry the total for free).  NULL partition values are
-    ordinary group keys here, so the NULL partition is never dropped
-    (the round-12 null-partition contract)."""
+    partitions as {value: Spark's string rendering of it}, in ONE
+    Spark job — the per-partition counts the commit needs carry the
+    total for free, and the rendering names the partition directories
+    (``commit_staged``).  NULL partition values are ordinary group keys
+    here, so the NULL partition is never dropped (the round-12
+    null-partition contract)."""
     if part_col is None:
         return df.count(), None
-    rows = df.groupBy(part_col).agg(F.count("*").alias("__n")).collect()
-    return sum(r["__n"] for r in rows), {r[0] for r in rows}
+    p = F.col(part_col)
+    rows = df.groupBy(p, p.cast("string")).count().collect()
+    return sum(r[2] for r in rows), {r[0]: r[1] for r in rows}
 
 
-def _write_full(spark: SparkSession, h: _Handle, final: DataFrame) -> None:
-    """Static full-table overwrite for UNPARTITIONED targets (every
-    partitioned write-back goes through overwrite_pruned — a
-    partitionBy arm here would be dead code implying safety it does
-    not have), preserving the readable-empty-table contract (an empty
-    partitioned write emits no schema file)."""
-    assert h.part_col is None, "partitioned targets use overwrite_pruned"
-    if not final.head(1):
-        spark.createDataFrame([], final.schema).write.mode(
-            "overwrite"
-        ).parquet(h.path)
-        return
-    final.write.mode("overwrite").parquet(h.path)
+def _write_empty(spark: SparkSession, h: _Handle, schema) -> None:
+    """Swap in the readable empty table: one schema-bearing root file
+    (partition column included as a data column)."""
+    from sparketl.operators.etl import commit_staged
+
+    commit_staged(spark, h.path, spark.createDataFrame([], schema), None)
 
 
 def _write_back(
@@ -866,56 +854,30 @@ def _write_back(
     name: str,
     h: _Handle,
     final: DataFrame,
-    touched_parts: DataFrame | set | None,
-    materialized: bool = False,
+    parts: dict | None,
 ) -> None:
-    """Copy-on-write write-back: pruned to the touched partitions when
-    the target is partitioned (overwrite_pruned — the merge_apply
-    write-back), full static overwrite otherwise.  ``materialized``
-    skips the checkpoint when ``final`` is already a pure projection
-    of checkpoints (MERGE) — re-materializing would copy the whole
-    result a second time.  ``touched_parts`` may be a pre-collected
-    SET of partition values (r15 job consolidation: the statement arms
-    fold the touched-partition derivation into the affected-row-count
-    job they already run, so the write-back does not pay a second
-    collect over the same frame)."""
-    from sparketl.operators.etl import _part_membership, overwrite_pruned
+    """Copy-on-write commit of DELETE / UPDATE: stage ``final``'s rows
+    of the touched partitions ``parts`` (from ``_count_and_parts``) and
+    swap them in, or swap the whole table when it is unpartitioned.
+    Membership is a LITERAL predicate over the collected values — a
+    semi-join on the partition column is null-BLIND, so a statement
+    touching the NULL partition would silently drop that partition's
+    surviving rows (round-12 review) — and it is bare, no coalesce(..,
+    false): under WHERE a NULL predicate already drops the row, and the
+    bare conjunct is what the partition pruner reads (round 15), so a
+    single-partition UPDATE on a 1,000-partition table reads one
+    partition."""
+    from sparketl.operators.etl import _part_membership, commit_staged
 
-    if h.part_col is None or touched_parts is None:
-        if not materialized:
-            final = _checkpointed(final)
-        _write_full(spark, h, final)
+    if h.part_col is None:
+        commit_staged(spark, h.path, final, None)
     else:
-        target = spark.read.parquet(h.path)
-        affected_vals = (
-            set(touched_parts)
-            if isinstance(touched_parts, set)
-            else {r[0] for r in touched_parts.collect()}
-        )
-        if not affected_vals:
-            _refresh(spark, name)
-            return
-        # membership by LITERAL predicate over the collected values —
-        # a semi-join on the partition column is null-BLIND, so a
-        # statement touching the NULL partition would silently drop
-        # that partition's surviving rows (round-12 review); the
-        # values are driver-side already, and the filter keeps the
-        # checkpointed rewrite the only scan in the plan (the
-        # overwrite_pruned materialization contract).  The filter
-        # applies BEFORE the checkpoint (round 15, VERDICT r14 #6):
-        # the literal partition predicate prunes the materializing
-        # scan to the TOUCHED partitions, so a single-partition UPDATE
-        # on a 1,000-partition table checkpoints one partition's rows,
-        # not the whole table (measured 7.1s → flat; SCALING.md).
-        # bare membership, no coalesce(.., false): under WHERE a NULL
-        # predicate already drops the row (identical semantics), and
-        # the bare conjunct is what the partition pruner can read — a
-        # coalesce wrapper blanked PartitionFilters (round 15)
-        rewrite = final.where(_part_membership(h.part_col, affected_vals))
-        if not materialized:
-            rewrite = _checkpointed(rewrite)
-        overwrite_pruned(
-            spark, h.path, target, rewrite, affected_vals, h.part_col
+        commit_staged(
+            spark,
+            h.path,
+            final.where(_part_membership(h.part_col, parts)),
+            h.part_col,
+            set(parts.values()),
         )
     _refresh(spark, name)
 
@@ -938,21 +900,6 @@ def _match_scan(spark: SparkSession, name: str, pred: str | None):
     tests/test_dml.py::test_partitioned_statement_scans_prune)."""
     where = f" where {pred}" if pred else ""
     return _d.sql(spark, f"select * from {name}{where}")
-
-
-def _has_partition_dirs(path: str) -> bool:
-    """True when the table root holds at least one ``col=value``
-    partition directory — the non-empty state of a partitioned table
-    (its empty state is a schema-bearing root FILE, the TRUNCATE
-    contract).  One driver-side listdir; never reads data."""
-    root = path[len("file:") :] if path.startswith("file:") else path
-    try:
-        return any(
-            "=" in e and not e.startswith((".", "_"))
-            for e in os.listdir(root)
-        )
-    except OSError:
-        return False
 
 
 def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
@@ -1014,30 +961,15 @@ def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         .alias(f.name)
         for f in tgt_schema.fields
     ]
-    out = _checkpointed(src.select(*proj))
-    n = out.count()
-    if n == 0:
-        # empty incremental load: skip the write entirely — on an
-        # EMPTY partitioned table the overwrite branch below would
-        # delete the schema-bearing root file and write nothing,
-        # leaving the directory unreadable (round-12 review 2)
-        return _rows_frame(spark, 0)
-    w = out.write.mode("append")
-    if h.part_col:
-        w = w.partitionBy(h.part_col)
-        if not _has_partition_dirs(h.path):
-            # the empty state of a partitioned table is a schema-bearing
-            # ROOT file (the readable-empty contract from TRUNCATE /
-            # whole-table DELETE); appending partition directories next
-            # to it creates the mixed layout spark.read rejects —
-            # overwrite clears the root file first.  The probe is ONE
-            # driver-side listdir of the root — the old
-            # spark.table(name).head(1) built the full partition file
-            # index per INSERT, measured 2.4s at 1,000 partitions
-            # (round 15, VERDICT r14 #6) vs microseconds here
-            w = out.write.mode("overwrite").partitionBy(h.part_col)
-    w.parquet(h.path)
-    _refresh(spark, name)
+    # the staged files are the count (footers, no job); an empty
+    # incremental load commits nothing
+    from sparketl.operators.etl import commit_staged
+
+    n = commit_staged(
+        spark, h.path, src.select(*proj), h.part_col, set(), _parquet_rows
+    )
+    if n:
+        _refresh(spark, name)
     return _rows_frame(spark, n)
 
 
@@ -1501,41 +1433,14 @@ def _create(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         df = df.limit(0)
     path = _table_dir(spark, name)
     h = _Handle(path=path, part_col=part_col, schema=df.schema)
-    if _reads_path(df, path):
-        # a source plan scanning the target path cannot happen through
-        # the front door (TABLE_ALREADY_EXISTS above) but CAN through a
-        # register_table alias — keep the materialize-first route there
-        df = _checkpointed(df)
-        n = df.count()
-        if n == 0:
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-        else:
-            w = df.write.mode("overwrite")
-            if part_col:
-                w = w.partitionBy(part_col)
-            w.parquet(path)
-    else:
-        # write-first CTAS (optimization r16, guide §1.2): the target
-        # cannot pre-exist, so the old checkpoint → count → write
-        # pipeline (three driver-blocking actions, the whole result
-        # materialized TWICE) guarded nothing; evaluate the query ONCE
-        # straight into the table files and take the affected-row
-        # count from the written parquet footers (driver-side
-        # metadata, no job).  An all-rows-pruned / WITH NO DATA result
-        # is rewritten as the schema-bearing empty ROOT file — an
-        # empty partitionBy write leaves a bare directory no reader
-        # can schema-infer (the readable-empty-table contract).
-        w = df.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(path)
-        n = _parquet_rows(path)
-        if n == 0:
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
+    # the query runs ONCE, straight into the table files, and the
+    # count comes from their footers (no job).  Staged like every
+    # write: a source that scans the target path (reachable through a
+    # register_table alias) reads it intact.
+    from sparketl.operators.etl import commit_staged
+
+    commit_staged(spark, path, df, part_col)
+    n = _parquet_rows(path)
     _handles(spark)[name] = h
     _refresh(spark, name)
     return _rows_frame(spark, n)
@@ -1723,8 +1628,7 @@ def _truncate(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         raise ValueError("dml: expected TRUNCATE TABLE <name>")
     name = _canon(spark, m.group(1))
     h = _resolve(spark, name)
-    schema = spark.table(name).schema
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(h.path)
+    _write_empty(spark, h, spark.table(name).schema)
     _refresh(spark, name)
     return _rows_frame(spark, 0)
 
@@ -1843,11 +1747,8 @@ def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     pred = (m.group(2) or "").strip()
     if not pred:
         # whole-table delete → readable empty table
-        schema = spark.table(name).schema
         n = spark.table(name).count()
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            h.path
-        )
+        _write_empty(spark, h, spark.table(name).schema)
         _refresh(spark, name)
         return _rows_frame(spark, n)
     pred = _unmask_raw(pred, lits)
@@ -1862,9 +1763,8 @@ def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     # the same scan's distinct partition values — two jobs per DELETE)
     n, touched = _count_and_parts(doomed, h.part_col)
     if n == 0:
-        # nothing matches: skip the copy-on-write entirely (the
-        # partitioned path's empty-affected early-out, mirrored for
-        # unpartitioned targets — round-12 review)
+        # nothing matches: skip the copy-on-write entirely (round-12
+        # review)
         return _rows_frame(spark, 0)
     final = _d.sql(
         spark, f"select * from {name} where ({pred}) is not true"
@@ -2125,8 +2025,8 @@ def _merge_apply_clauses(
     FIRST satisfied WHEN MATCHED clause applies (CASE over the clause
     conditions, in statement order); NOT MATCHED source rows (anti-join)
     take the first satisfied INSERT clause.  The multi-source-match
-    guard is Trino's runtime error, computed as one tiny aggregate over
-    the join before any write."""
+    guard is Trino's runtime error, observed on the write job and
+    raised before the commit."""
     tgt_df = spark.table(name)
     # MERGE expressions resolve against the target and source frames
     # first — overlay their column classes onto the catalog's (a
@@ -2136,6 +2036,7 @@ def _merge_apply_clauses(
     # could mean the catalog's) → the int-division pass refuses rather
     # than guesses.
     from sparketl.dialect import _classify_type_name
+    from sparketl.operators.etl import _part_membership, commit_staged
 
     colcls = dict(_catalog_column_classes(spark))
     for f in list(tgt_df.schema.fields) + list(src_df.schema.fields):
@@ -2148,52 +2049,11 @@ def _merge_apply_clauses(
     def tx(fragment: str) -> str:
         return translate(_unmask_raw(fragment, lits), schema=colcls)
 
-    tgt_cols = tgt_df.columns
-    s = src_df.withColumn("__sm", F.lit(1)).alias(salias)
-    scan = tgt_df
-    probe_parts: set | None = None
-    if h.part_col is not None:
-        # probe-side partition pruning (VERDICT r13 #1): the matched
-        # probe below MATERIALIZES the target twice (the __tid
-        # checkpoint and the staged-join checkpoint) — at x100 that
-        # made MERGE's x10→x100 wall ratio 8.4 vs DELETE's 3.1
-        # (SCALING.md round-13 table).  A matched target row can only
-        # live in a partition holding at least one source match, so
-        # ONE semi-join SCAN (aggregate-only — no checkpoint, no wide
-        # result) derives that partition set and prunes the probe's
-        # target scan to it; untouched partitions never enter the
-        # join, the checkpoints, or the rewrite frame.  The collect is
-        # partition-value-sized (the _write_back contract).  The NOT
-        # MATCHED anti-join below stays equivalent against the pruned
-        # frame: any source row's matches lie in probe_parts
-        # partitions by construction.
-        probe_parts = {
-            r[0]
-            for r in tgt_df.alias(talias)
-            .join(s, F.expr(tx(on_cond)), "left_semi")
-            .select(h.part_col)
-            .distinct()
-            .collect()
-        }
-        from sparketl.operators.etl import _part_membership
-
-        # bare membership (no coalesce belt): under WHERE a NULL
-        # predicate drops the row exactly like false, and the bare
-        # conjunct is what the partition pruner reads — the coalesce
-        # wrapper blanked PartitionFilters, so the probe-pruned scan
-        # still LISTED/READ every partition (round 15, VERDICT r14 #6)
-        scan = tgt_df.where(_part_membership(h.part_col, probe_parts))
-    t = scan.withColumn(
-        "__tid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
-    joined = t.alias(talias).join(s, F.expr(tx(on_cond)), "left")
     matched_clauses = [c for c in clauses if c["kind"] in ("update", "delete")]
     insert_clauses = [c for c in clauses if c["kind"] == "insert"]
     # an UPDATE SET on the partition column would move rows between
-    # partitions: the touched set is computed from the NEW value, so
-    # the OLD partition is never rewritten and the stale original
-    # survives — silent duplication (round-12 review; plain UPDATE
-    # refuses identically)
+    # partitions; refused as plain UPDATE refuses it, whose rewrite
+    # keeps only rows whose partition value it touched (round-12 review)
     if h.part_col and any(
         c["kind"] == "update"
         and h.part_col in {a for a, _ in c["assigns"]}
@@ -2204,6 +2064,37 @@ def _merge_apply_clauses(
             "— rows would move between partitions; DELETE + INSERT "
             "instead"
         )
+    tgt_cols = tgt_df.columns
+    s = src_df.withColumn("__sm", F.lit(1)).alias(salias)
+    scan = tgt_df
+    replace: set | None = None
+    if h.part_col is not None:
+        # probe-side partition pruning (VERDICT r13 #1): a matched
+        # target row can only live in a partition holding at least one
+        # source match, so ONE semi-join SCAN (aggregate-only, no wide
+        # result) derives that partition set; the join below reads only
+        # those partitions and the commit replaces exactly them.  The
+        # collect is partition-value-sized and carries Spark's string
+        # rendering of each value, which names its directory.  The NOT
+        # MATCHED anti-join stays equivalent against the pruned frame:
+        # any source row's matches lie in probed partitions by
+        # construction.
+        p = F.col(h.part_col)
+        probe = dict(
+            tgt_df.alias(talias)
+            .join(s, F.expr(tx(on_cond)), "left_semi")
+            .select(p, p.cast("string"))
+            .distinct()
+            .collect()
+        )
+        replace = set(probe.values())
+        # bare membership (no coalesce belt): under WHERE a NULL
+        # predicate drops the row exactly like false, and the bare
+        # conjunct is what the partition pruner reads (round 15)
+        scan = tgt_df.where(_part_membership(h.part_col, probe))
+    tgt_obs, join_obs, ins_obs = Observation(), Observation(), Observation()
+    t = scan.observe(tgt_obs, F.count(F.lit(1)).alias("n"))
+    joined = t.alias(talias).join(s, F.expr(tx(on_cond)), "left")
     # first-satisfied-clause index per matched row
     act = F.lit(None).cast("int")
     for i in reversed(range(len(matched_clauses))):
@@ -2212,71 +2103,22 @@ def _merge_apply_clauses(
         if c["cond"]:
             cond = cond & F.expr(tx(c["cond"])).eqNullSafe(F.lit(True))
         act = F.when(cond, F.lit(i)).otherwise(act)
-    # ONE materialization of the join: the guard, the survivors, the
-    # delete count and the touched partitions all derive from this
-    # checkpoint instead of re-running the join per consumer (round-12
-    # review 2); it also breaks the self-merge lineage (USING the
-    # target itself) before the overwrite.
-    staged = joined.withColumn("__act", act).localCheckpoint(eager=True)
     delete_ids = {
         i for i, c in enumerate(matched_clauses) if c["kind"] == "delete"
     }
-    # ONE stats job over the staged checkpoint (r15 job consolidation):
-    # the multi-source-match guard, the deleted/updated row counts, and
-    # the touched target-side partition values previously ran as THREE
-    # separate driver-blocking actions (guard count, n_deleted count,
-    # and the write-back's touched-partition collect) — at statement
-    # granularity those sequential small jobs are most of the MERGE
-    # wall (measured sf0.1: the statement spent ~2.9 s across ~10
-    # blocking actions of ~0.25 s each).  A NULL touched partition
-    # value is carried by an explicit flag because collect_set drops
-    # NULLs (the round-12 null-partition contract).
     is_del = (
         F.col("__act").isin(*delete_ids) if delete_ids else F.lit(False)
     )
-    is_upd = F.col("__act").isNotNull() & ~is_del
-    per_tid_aggs = [
-        F.count(F.when(F.col("__sm").isNotNull(), 1)).alias("__m"),
-        F.count(F.when(is_del, 1)).alias("__d"),
-        F.count(F.when(is_upd, 1)).alias("__u"),
-    ]
-    if h.part_col is not None:
-        # touched partitions from the PRE-update value only — correct
-        # solely because UPDATE SET on the partition column is refused
-        # above (ADVICE r15: were that guard ever relaxed, rows moving
-        # between partitions would be written back to their OLD
-        # partition and silently lost; extend this to collect both
-        # old and new values before relaxing it)
-        per_tid_aggs.append(
-            F.first(F.expr(f"{talias}.{h.part_col}")).alias("__p")
-        )
-    top_aggs = [
-        F.max("__m").alias("__mx"),
-        F.sum("__d").alias("__nd"),
-        F.sum("__u").alias("__nu"),
-    ]
-    if h.part_col is not None:
-        hit = (F.col("__d") + F.col("__u")) > 0
-        top_aggs += [
-            F.collect_set(F.when(hit, F.col("__p"))).alias("__tp"),
-            F.max(
-                F.when(hit & F.col("__p").isNull(), 1).otherwise(0)
-            ).alias("__tpn"),
-        ]
-    stats = staged.groupBy("__tid").agg(*per_tid_aggs).agg(*top_aggs).collect()[0]
-    if (stats["__mx"] or 0) > 1:
-        raise ValueError(
-            "dml: MERGE failed — a target row matches more than one "
-            "source row (Trino's one-source-row rule); deduplicate the "
-            "source or tighten the ON condition"
-        )
-    n_deleted = int(stats["__nd"] or 0)
-    n_updated = int(stats["__nu"] or 0)
-    touched_vals: set | None = None
-    if h.part_col is not None:
-        touched_vals = set(stats["__tp"] or [])
-        if stats["__tpn"]:
-            touched_vals.add(None)
+    # the counts and the one-source-row guard are observed on the
+    # write job itself: a left join emits max(1, m) rows per target
+    # row, so more join rows than target rows means some target row
+    # matched m > 1 source rows
+    acted = joined.withColumn("__act", act).observe(
+        join_obs,
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(is_del, 1)).alias("d"),
+        F.count(F.when(F.col("__act").isNotNull() & ~is_del, 1)).alias("u"),
+    )
     # surviving target rows with per-clause update CASEs applied
     proj = []
     for col in tgt_cols:
@@ -2290,20 +2132,12 @@ def _merge_apply_clauses(
                     F.col("__act") == i, F.expr(tx(rhs))
                 ).otherwise(e)
         proj.append(e.cast(tgt_df.schema[col].dataType).alias(col))
-    survivors = staged.where(
-        F.col("__act").isNull()
-        | ~F.col("__act").isin(*delete_ids)
-        if delete_ids
-        else F.lit(True)
-    ).select(*proj, F.col("__act").isNotNull().alias("__touched"))
+    final = acted.where(~is_del.eqNullSafe(F.lit(True))).select(*proj)
     # NOT MATCHED inserts: source rows with no target match
-    # (checkpointed too: with a self-merge the source reads the
-    # directory being overwritten)
-    inserts = None
     if insert_clauses:
         unmatched = src_df.alias(salias).join(
-            t.alias(talias), F.expr(tx(on_cond)), "left_anti"
-        ).localCheckpoint(eager=True)
+            scan.alias(talias), F.expr(tx(on_cond)), "left_anti"
+        )
         iact = F.lit(None).cast("int")
         for i in reversed(range(len(insert_clauses))):
             c = insert_clauses[i]
@@ -2340,58 +2174,39 @@ def _merge_apply_clauses(
                 .alias(col)
                 for col in tgt_cols
             ]
-            frames.append(
-                tagged.where(F.col("__iact") == i).select(
-                    *sel, F.lit(True).alias("__touched")
-                )
-            )
+            frames.append(tagged.where(F.col("__iact") == i).select(*sel))
         inserts = frames[0]
         for fr in frames[1:]:
             inserts = inserts.unionByName(fr)
-    # every input below is a projection of a checkpoint — no further
-    # materialization needed (the write-back is told so)
-    final_tagged = (
-        survivors.unionByName(inserts) if inserts is not None else survivors
-    )
-    final = final_tagged.select(*tgt_cols)
-    # insert-side stats in ONE job (r15 consolidation): the per-
-    # partition counts give the inserted-row total AND the insert
-    # partition values the write-back and the probe-prune escape both
-    # need — previously a distinct-collect and a separate n_touched
-    # count.  groupBy keeps a NULL partition value as a group key.
-    n_inserted = 0
-    ins_parts: set = set()
-    if inserts is not None:
-        if h.part_col is not None:
-            rows = (
-                inserts.groupBy(h.part_col)
-                .agg(F.count("*").alias("__c"))
-                .collect()
-            )
-            n_inserted = sum(r["__c"] for r in rows)
-            ins_parts = {r[0] for r in rows}
-        else:
-            n_inserted = inserts.count()
-    if probe_parts is not None and inserts is not None:
-        # INSERT rows may land in partitions the probe pruned OUT
-        # (their partition value comes from the INSERT expressions,
-        # not the ON condition); those partitions will be rewritten —
-        # their surviving rows must re-enter the rewrite frame or the
-        # partition overwrite would drop them.  `keep` is checkpointed
-        # so `final` remains a pure projection of materialized frames.
-        extra = ins_parts - probe_parts
-        if extra:
-            from sparketl.operators.etl import _part_membership
+        final = final.unionByName(
+            inserts.observe(ins_obs, F.count(F.lit(1)).alias("n"))
+        )
 
-            # bare membership: prunable, and WHERE(NULL) == WHERE(false)
-            keep = tgt_df.where(
-                _part_membership(h.part_col, extra)
-            ).localCheckpoint(eager=True)
-            final = final.unionByName(keep.select(*tgt_cols))
-    if touched_vals is not None:
-        touched_vals |= ins_parts
-    _write_back(spark, name, h, final, touched_vals, materialized=True)
-    return _rows_frame(spark, n_updated + n_inserted + n_deleted)
+    def affected(_stage: str) -> int:
+        joins = _observed(join_obs)
+        if joins.get("n", 0) > _observed(tgt_obs).get("n", 0):
+            raise ValueError(
+                "dml: MERGE failed — a target row matches more than one "
+                "source row (Trino's one-source-row rule); deduplicate "
+                "the source or tighten the ON condition"
+            )
+        n = joins.get("d", 0) + joins.get("u", 0)
+        return n + (_observed(ins_obs).get("n", 0) if insert_clauses else 0)
+
+    # partitioned: the probed partitions are replaced and insert-only
+    # partitions appended; nothing changed → nothing committed
+    n = commit_staged(spark, h.path, final, h.part_col, replace, affected)
+    if n:
+        _refresh(spark, name)
+    return _rows_frame(spark, n)
+
+
+def _observed(obs: Observation) -> dict:
+    """An observation's metrics after its write job — empty when the
+    optimizer removed the observed node because its input was
+    statically empty (an empty probe set, an empty VALUES source),
+    which is a zero count."""
+    return obs.get if obs._jo.getRow().length() else {}  # noqa: SLF001
 
 
 # ---------------------------------------------------------------------------
@@ -2687,11 +2502,16 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         actual_old = next(
             f.name for f in schema.fields if f.name.lower() == old
         )
-        df = _checkpointed(
-            spark.table(name).withColumnRenamed(actual_old, rc.group(2))
-        )
         from pyspark.sql.types import StructField, StructType
 
+        from sparketl.operators.etl import commit_staged
+
+        commit_staged(
+            spark,
+            h.path,
+            spark.table(name).withColumnRenamed(actual_old, rc.group(2)),
+            h.part_col,
+        )
         h.schema = StructType(
             [
                 StructField(rc.group(2), f.dataType, f.nullable)
@@ -2700,15 +2520,6 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 for f in schema.fields
             ]
         )
-        if not df.head(1):
-            spark.createDataFrame([], h.schema).write.mode(
-                "overwrite"
-            ).parquet(h.path)
-        else:
-            w = df.write.mode("overwrite")
-            if h.part_col:
-                w = w.partitionBy(h.part_col)
-            w.parquet(h.path)
         _refresh(spark, name)
         return _rows_frame(spark, 0)
 

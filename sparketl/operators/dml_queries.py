@@ -19,8 +19,8 @@ clashes under the concurrent bench pool.
 Scale: the engine-side costs are the ones the module docstring of
 sparketl.dml states — INSERT appends part files, DELETE / UPDATE /
 MERGE rewrite only the partitions containing touched rows when the
-target is partitioned (overwrite_pruned, the merge_apply write-back),
-and pay a full rewrite on unpartitioned targets.  The faces cover
+target is partitioned (commit_staged, shared with merge_apply), and
+pay a full rewrite on unpartitioned targets.  The faces cover
 both: sql_delete/sql_merge_into run against partitioned targets (the
 pruned path incl. emptied-partition handling), sql_insert_into and
 sql_update against unpartitioned ones.
@@ -123,8 +123,9 @@ def sql_insert_into(spark, sf_dir):
     returns the table re-read from disk.
 
     Scale: INSERT is a pure append — new part files only, no rewrite
-    of existing data; the insert frame is checkpointed so a
-    self-referencing INSERT cannot race its own scan.
+    of existing data; the rows are staged beside the table before
+    their files move in, so a self-referencing INSERT cannot race its
+    own scan.
     """
     _setup(spark, sf_dir, "ins")
     _run(
@@ -279,7 +280,7 @@ def sql_delete(spark, sf_dir):
     parquet table: rows where the predicate evaluates NULL (here via
     nullif on the first line number) survive — Presto deletes only
     where it IS TRUE.  The write-back is the pruned copy-on-write
-    (overwrite_pruned): only partitions containing deleted rows are
+    (commit_staged): only partitions containing deleted rows are
     rewritten, and a fully-emptied partition's directory is dropped.
 
     Scale: at 100 TB the rewrite cost is bounded by the touched

@@ -6,8 +6,9 @@ against a stored table) and the type-2 slowly-changing-dimension
 build (attribute history with validity intervals).  Presto/Trino
 expose MERGE as DML against Iceberg/Delta connectors; here the same
 copy-on-write semantics are expressed on plain partitioned parquet —
-anti-join + union + dynamic partition overwrite — so the plan shape
-is visible and oracle-checkable.
+anti-join + union, staged beside the table and committed by renaming
+the touched partition directories — so the plan shape is visible and
+oracle-checkable.
 
 Determinism: the change feed is derived from the fixture tables by
 pure key arithmetic (no rand/now), so Spark and the DuckDB oracle
@@ -24,11 +25,15 @@ same (partition, order) — Spark reuses the exchange and sort.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparketl.registry import query
-from sparketl.sources.connectors import _partition_overwrite_dynamic, _scratch_dir
+from sparketl.sources.connectors import _scratch_dir
 from sparketl.tables import table
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -54,62 +59,41 @@ def merge_apply(spark, path: str, feed, key_col: str, part_col: str) -> None:
     partitions = partition values of target rows semi-joined to the
     BROADCAST feed keys plus upsert partition values; rewrite = those
     partitions anti-joined to feed keys, unioned with the upserts;
-    dynamic partition overwrite writes back only them.  Per-batch cost
-    is O(feed + touched partitions), independent of how many feeds
-    were applied before — measured two-batch walls in SCALING.md.
-
-    EMPTIED-partition guard (round-9 review): dynamic overwrite only
-    replaces partitions the rewrite WRITES — a partition whose every
-    row is deleted produces zero rewrite rows, so dynamic mode would
-    silently leave its old files (and the deleted rows) in place.
-    Both partition lists are driver-sized (distinct partition values,
-    already the broadcast side), so the guard is two tiny collects.
-    When partitions empty, the apply stays on the pruned path (ADVICE
-    r9 — a routine purge-shaped feed must not pay a whole-table
-    rewrite): the surviving touched partitions go through the same
-    dynamic overwrite, then the emptied partitions' DIRECTORIES are
-    dropped via the Hadoop FileSystem API — the Hive/Iceberg DROP
-    PARTITION shape, and the only way to express "this partition is
-    now empty" to a path-based dynamic overwrite (an empty frame
-    writes no directory at all).  A mid-apply failure between the two
-    steps leaves deleted rows present-but-stale, which the fixed-point
-    re-apply repairs — same recovery contract as the write itself.
-    The pruned delete runs only for partition values whose Python
-    rendering provably equals Spark's directory name (non-bool ints,
-    dates, plain-charset strings — an ALLOWLIST, not an escape
-    deny-set); everything else, including NULL, falls back to the
-    static full-table overwrite rather than guessing the encoding.
-    tests/test_etl.py::test_merge_apply_delete_empties_partition pins
-    the row loss, the fixed point, AND that untouched partitions' data
-    files are not rewritten on the purge path."""
+    :func:`commit_staged` writes the rewrite beside the table and swaps
+    it in for exactly those partitions — an affected partition the
+    rewrite leaves empty (every row deleted) loses its directory, and
+    a purge of every partition leaves the readable empty table.
+    Per-batch cost is O(feed + touched partitions), independent of how
+    many feeds were applied before — measured two-batch walls in
+    SCALING.md.  tests/test_etl.py pins the emptied partition, the
+    whole-table purge, an insert after that purge, and a partition
+    value Spark escapes in its directory name."""
     target = spark.read.parquet(path)
     keys = feed.select(key_col).distinct()
     upserts = feed.where(F.col("__op").isin("U", "I")).drop("__op")
-    affected = (
+    part = F.col(part_col)
+    affected = dict(
         target.join(F.broadcast(keys), key_col, "left_semi")
-        .select(part_col)
-        .unionByName(upserts.select(part_col))
+        .select(part)
+        .unionByName(upserts.select(part))
+        .select(part, part.cast("string"))
         .distinct()
+        .collect()
     )
-    affected_vals = {r[0] for r in affected.collect()}
     # membership by LITERAL predicate, not a semi-join: the join form
     # is null-BLIND, so a feed touching the NULL partition would drop
-    # that partition's SURVIVORS from the rewrite (round-12 review)
-    # positive filter: bare membership — WHERE(NULL) == WHERE(false),
-    # and only the bare conjunct partition-prunes the scan (round 15).
-    # The NEGATED keep-filter in overwrite_pruned's static path MUST
-    # keep its coalesce: there ~NULL would drop NULL-partition
-    # survivors.
+    # that partition's SURVIVORS from the rewrite (round-12 review);
+    # bare membership — WHERE(NULL) == WHERE(false), and only the bare
+    # conjunct partition-prunes the scan (round 15)
     rewrite = (
-        target.where(_part_membership(part_col, affected_vals))
+        target.where(_part_membership(part_col, affected))
         .join(F.broadcast(keys), key_col, "left_anti")
         .unionByName(upserts.select(*target.columns))
-        .localCheckpoint(eager=True)
     )
-    overwrite_pruned(spark, path, target, rewrite, affected_vals, part_col)
+    commit_staged(spark, path, rewrite, part_col, set(affected.values()))
 
 
-def _part_membership(part_col: str, vals: set):
+def _part_membership(part_col: str, vals):
     """NULL-safe membership of the partition column in a driver-side
     value set: ``isin`` (and any equi-join) is null-BLIND — NULL never
     matches — so the NULL partition needs its own isNull() arm."""
@@ -122,133 +106,120 @@ def _part_membership(part_col: str, vals: set):
     return cond
 
 
-def overwrite_pruned(
-    spark, path: str, target, rewrite, affected_vals: set, part_col: str
-) -> None:
-    """Write ``rewrite`` back over ONLY the affected partitions of the
-    parquet table at ``path`` — the merge_apply write-back, extracted
-    (round 12) so statement-level DML (sparketl.dml DELETE / UPDATE /
-    MERGE INTO) reuses the exact same guards instead of reimplementing
-    them.
+def _entries(d: str) -> list[str]:
+    """Data entries of a table directory by Spark's listing rule: names
+    starting with '.', or with '_' and holding no '=', are markers and
+    checksums."""
+    try:
+        names = os.listdir(d)
+    except FileNotFoundError:
+        return []
+    return [
+        e
+        for e in names
+        if not (e.startswith(".") or (e.startswith("_") and "=" not in e))
+    ]
 
-    Contract: ``target`` is the PRE-write frame read from ``path``;
-    ``rewrite`` holds the complete new contents of the partitions in
-    ``affected_vals`` and MUST already be materialized
-    (``localCheckpoint(eager=True)``) so its plan no longer reads the
-    directory being overwritten; partitions outside ``affected_vals``
-    are untouched.  All driver-side collects here are partition-value
-    sized.  The guard lattice (each pinned by tests/test_etl.py):
 
-    - every partition empties → schema-bearing empty-table write
-      (a bare root no reader can schema-infer otherwise);
-    - root-level data files, or an emptied partition whose value's
-      Python rendering is not provably Spark's directory name
-      (ALLOWLIST: non-bool ints, dates, plain-charset strings) →
-      STATIC full overwrite (unaffected partitions ∪ rewrite);
-    - otherwise dynamic partition overwrite of the rewrite, then the
-      emptied partitions' directories dropped via the Hadoop FS API.
-    """
-    surviving_vals = {r[0] for r in rewrite.select(part_col).distinct().collect()}
-    emptied = affected_vals - surviving_vals
-    if not surviving_vals and emptied:
-        remaining = {
-            r[0] for r in target.select(part_col).distinct().collect()
-        } - affected_vals
-        if not remaining:
-            # ADVICE r10: EVERY partition of the table empties.  Both
-            # normal paths would leave a bare table root no reader can
-            # schema-infer (dynamic overwrite writes nothing before the
-            # directory drops; the static fallback's partitionBy write
-            # of an empty frame emits no data file either), breaking
-            # the next read AND the fixed-point re-apply recovery.
-            # Write a schema-bearing empty table instead: a plain
-            # static overwrite of an empty frame emits one 0-row part
-            # file carrying the full schema, partition column included
-            # as a data column (probed live: the read-back returns 0
-            # rows with the original schema).  The collect is
-            # partition-value-sized and runs only on this rare path.
-            spark.createDataFrame([], target.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-            return
-    # ALLOWLIST gate for the pruned delete (review r10 — a deny-set of
-    # escaped characters misses whole classes where Python's str(v) is
-    # not Spark's directory name: bool True/'true', float repr
-    # '1e-07'/'1.0E-7', %-escaped control chars).  The pruned path
-    # runs only for values whose rendering provably matches Spark's:
-    # non-bool ints, dates (ISO on both sides), and strings made of
-    # characters Spark never escapes; everything else — including
-    # NULL (__HIVE_DEFAULT_PARTITION__) — takes the safe full
-    # overwrite.
-    import datetime as _dt
+def commit_staged(
+    spark,
+    path: str,
+    frame,
+    part_col: str | None,
+    replace: set | None = None,
+    check=None,
+):
+    """Write ``frame`` into a staging directory beside the table at
+    ``path`` (``_stage-<table>-<uuid>``, skipped by Spark and pyarrow
+    listings), then commit it by renames.  The plan never reads what it
+    overwrites, so nothing is materialized first.
 
-    _SAFE_CHARS = frozenset(
-        "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789._-+@"
+    - ``replace=None`` swaps the whole table for the staged one.
+    - Otherwise ``replace`` holds the Spark renderings
+      (``cast(part_col as string)``) of the partitions ``frame``
+      replaces: each staged partition directory takes the live one's
+      place, and a replaced partition with no staged rows is removed.
+      Every other staged entry is APPENDED — a new partition directory
+      is renamed in, files of an existing one move into it, and on an
+      unpartitioned table (``replace`` empty) the staged files move
+      into the root.
+    - ``check(stage)``, when given, runs after staging and before any
+      rename; it may raise to abort, and its result is returned — a
+      falsy result discards the stage without committing.
+
+    Directory names come from Spark, never from Python's ``str()``:
+    ``ExternalCatalogUtils.getPartitionPathString`` renders each value
+    exactly as the writer does (NULL and '' become
+    ``__HIVE_DEFAULT_PARTITION__``, ':' becomes '%3A').  A partitioned
+    table's empty state is a schema-bearing root FILE (an empty
+    ``partitionBy`` write leaves a bare directory no reader can
+    schema-infer): a commit that would leave no partition directory
+    swaps that file in instead, and one that adds partitions removes
+    it.
+
+    The stage is deleted on every exit, so a failure before the commit
+    leaves the table in its pre-state.  The commit itself is a sequence
+    of renames, not one atomic step: a crash between the renames of a
+    multi-partition commit can still leave a mix of old and new
+    partitions (a manifest compare-and-swap commit would close it)."""
+    root = path.removeprefix("file:")
+    stage = os.path.join(
+        os.path.dirname(root),
+        f"_stage-{os.path.basename(root)}-{uuid.uuid4().hex}",
     )
-
-    def _dir_safe(v) -> bool:
-        if isinstance(v, bool) or v is None:
-            return False
-        if isinstance(v, int):
-            return True
-        # date yes (ISO on both sides); datetime no (space + colons
-        # are %-escaped in the directory name)
-        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-            return True
-        return (
-            isinstance(v, str) and v != "" and set(v) <= _SAFE_CHARS
-        )
-
-    # Root-level data files (the schema-bearing empty table the guard
-    # above writes) force the STATIC path: a dynamic overwrite would
-    # add partition directories NEXT TO the root file, a mixed layout
-    # spark.read.parquet rejects ("conflicting directory structures" —
-    # round-11 review).  The static overwrite clears the whole root
-    # first.  One driver-side FS listing per apply.
-    jvm = spark._jvm  # noqa: SLF001 - Hadoop FS, same JVM the write used
-    hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    root_has_data = any(
-        not st.isDirectory()
-        and not st.getPath().getName().startswith(("_", "."))
-        for st in root.getFileSystem(hconf).listStatus(root)
-    )
-    if root_has_data or (emptied and not all(_dir_safe(v) for v in emptied)):
-        # unaffected partitions ∪ rewrite ≡ the final table (for the
-        # merge feed this equals the old keys-anti-join ∪ upserts form:
-        # untouched partitions carry no feed keys and no upserts).
-        # The affected set is already a driver-side value list, so the
-        # membership test is a LITERAL predicate — crucially NULL-SAFE
-        # where a left_anti join on the partition column is not: the
-        # NULL partition is exactly where this static path lands
-        # (round-12 review — the join form silently RESURRECTED
-        # feed-deleted NULL-partition rows).
-        keep = ~F.coalesce(
-            _part_membership(part_col, affected_vals), F.lit(False)
-        )
-        full = (
-            target.where(keep)
-            .unionByName(rewrite.select(*target.columns))
-            .localCheckpoint(eager=True)
-        )
-        if not full.head(1):
-            # all rows gone AND the static partitionBy write of an
-            # empty frame would emit no data file — same readable-
-            # empty-table contract as the guard above
-            spark.createDataFrame([], target.schema).write.mode(
+    try:
+        w = frame.write.mode("overwrite")
+        if part_col is not None:
+            w = w.partitionBy(part_col)
+        w.parquet(stage)
+        out = check(stage) if check is not None else None
+        if check is not None and not out:
+            return out
+        staged = set(_entries(stage))
+        if replace is not None and part_col is not None:
+            col = next(
+                c for c in frame.columns if c.lower() == part_col.lower()
+            )
+            jvm = spark._jvm  # noqa: SLF001 - the writer's own renderer
+            ecu = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            replace = {ecu.getPartitionPathString(col, v) for v in replace}
+            live = {e for e in _entries(root) if "=" in e}
+            if not staged and live <= replace:
+                replace = None
+        if part_col is not None and replace is None and not staged:
+            spark.createDataFrame([], frame.schema).write.mode(
                 "overwrite"
-            ).parquet(path)
-            return
-        full.write.mode("overwrite").partitionBy(part_col).parquet(path)
+            ).parquet(stage)
+        _commit(root, stage, part_col, replace)
+        return out
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(stage + "-old", ignore_errors=True)
+
+
+def _commit(root: str, stage: str, part_col: str | None, replace) -> None:
+    """The rename half of :func:`commit_staged`; displaced live entries
+    go to ``<stage>-old``, which the caller deletes."""
+    old = stage + "-old"
+    if replace is None:
+        if os.path.exists(root):
+            os.rename(root, old)
+        os.rename(stage, root)
         return
-    with _partition_overwrite_dynamic(spark):
-        rewrite.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    if emptied:
-        jvm = spark._jvm  # noqa: SLF001 - Hadoop FS, same JVM the write used
-        hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        for v in sorted(str(v) for v in emptied):
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_col}={v}")
-            p.getFileSystem(hconf).delete(p, True)
+    os.mkdir(old)
+    gone = set(replace)
+    if part_col is not None:
+        gone |= {e for e in _entries(root) if "=" not in e}
+    for e in gone:
+        if os.path.exists(os.path.join(root, e)):
+            os.rename(os.path.join(root, e), os.path.join(old, e))
+    for e in _entries(stage):
+        src, dst = os.path.join(stage, e), os.path.join(root, e)
+        if os.path.isdir(dst):
+            for f in _entries(src):
+                os.rename(os.path.join(src, f), os.path.join(dst, f))
+        else:
+            os.rename(src, dst)
 
 
 def build_merge_feed(
@@ -314,8 +285,9 @@ def sink_merge_upsert(spark, sf_dir):
     joined to the broadcast changed-key set, plus insert priorities;
     (2) rewrite = target rows in affected partitions, anti-joined to
     broadcast changed keys, unioned with updates and inserts;
-    (3) ``partitionOverwriteMode=dynamic`` writes back ONLY those
-    partitions — untouched directories are never read or rewritten.
+    (3) the rewrite is staged beside the table and swapped in for ONLY
+    those partitions — untouched directories are never read or
+    rewritten.
 
     Scale: the change feed is ≪ target (the nightly-upsert shape), so
     both the semi- and anti-join broadcast — zero shuffle of the
@@ -324,10 +296,9 @@ def sink_merge_upsert(spark, sf_dir):
     file granularity.  If the feed outgrows the broadcast budget the
     hints drop and both joins degrade to shuffle joins keyed on
     o_orderkey — correct, just no longer target-shuffle-free.  The
-    ``localCheckpoint`` cuts lineage so the rewrite can target the
-    directory it read (at cluster scale: stage-dir + commit protocol
-    instead; the checkpoint holds only the rewritten partitions, not
-    the table).  Fixture note: 5 coarse priorities make every
+    staging directory is what lets the rewrite read the partitions it
+    replaces without materializing them first.  Fixture note: 5
+    coarse priorities make every
     partition "affected" at sf0.1 — at production granularity
     (e.g. daily date partitions × bounded-key feeds) pruning bites;
     the plan, not the fixture, is the claim.
@@ -340,10 +311,7 @@ def sink_merge_upsert(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
     path = _scratch_dir(sf_dir, "merge_target")
     key = F.col("o_orderkey")
-    # Snapshot write stays under the static (session-default) mode so it
-    # truly truncates a stale scratch dir; only the merge rewrite below
-    # needs dynamic overwrite, scoped so the setting can't leak into
-    # later partitioned overwrites in a shared session.
+    # the snapshot write truly truncates a stale scratch dir
     (
         orders.where(F.col("o_orderstatus") == "F")
         .write.mode("overwrite")

@@ -406,8 +406,8 @@ def test_null_partition_delete_and_survivors(spark, wh):
 def test_merge_apply_null_partition_feed(spark, tmp_path):
     """merge_apply itself with a NULL-partition feed: the doomed row
     leaves, the NULL-partition survivor stays, other partitions
-    untouched (the static fallback path — NULL fails the dir-name
-    allowlist)."""
+    untouched (the NULL partition's directory is Spark's
+    __HIVE_DEFAULT_PARTITION__)."""
     from pyspark.sql import functions as F
 
     from sparketl.operators.etl import merge_apply
@@ -1967,3 +1967,128 @@ def test_partitioned_statement_scans_prune(spark, wh):
     # and a no-predicate match scan is simply the full scan
     assert dml._match_scan(spark, "t_prg", None).count() == 4
     dialect.sql(spark, "drop table t_prg")
+
+
+#: one statement of each row-level kind against table {t} (columns k,
+#: v, g partitioned by g, rows from dml_fx); each touches partition 'a'
+#: and MERGE also inserts into a new one
+_ROW_STATEMENTS = {
+    "insert": "insert into {t} values (6, 60.0, 'a')",
+    "delete": "delete from {t} where k = 1",
+    "update": "update {t} set v = v + 1 where k = 3",
+    "merge": (
+        "merge into {t} as t using "
+        "(select 3 as sk, 'a' as sg union all select 8, 'd') as s "
+        "on t.k = s.sk "
+        "when matched then update set v = 0.0 "
+        "when not matched then insert (k, g, v) values (s.sk, s.sg, 8.0)"
+    ),
+}
+
+
+def _st_table(spark, t):
+    dialect.sql(
+        spark,
+        f"create table {t} with (partitioned_by = array['g']) as "
+        "select k, v, g from dml_fx",
+    )
+    return dml.table_path(spark, t)
+
+
+def _stage_dirs(base):
+    return [
+        os.path.join(r, d)
+        for r, ds, _ in os.walk(base)
+        for d in ds
+        if d.startswith("_stage-")
+    ]
+
+
+def test_failed_write_leaves_pre_state(spark, wh, monkeypatch):
+    """A statement that fails after staging its rows — its commit
+    raises, or a MERGE breaks the one-source-row rule — leaves the
+    table reading exactly its pre-state, its files untouched, and no
+    staging directory behind."""
+    from sparketl.operators import etl
+
+    path = _st_table(spark, "t_fw")
+    pre, files = _state(spark, "t_fw"), dml._file_snapshot(path)
+
+    def boom(*_a, **_k):
+        raise OSError("injected commit failure")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(etl, "_commit", boom)
+        for stmt in _ROW_STATEMENTS.values():
+            with pytest.raises(OSError, match="injected"):
+                dialect.sql(spark, stmt.format(t="t_fw"))
+            assert _state(spark, "t_fw") == pre
+            assert dml._file_snapshot(path) == files
+            assert _stage_dirs(wh) == []
+    with pytest.raises(ValueError, match="one-source-row"):
+        dialect.sql(
+            spark,
+            "merge into t_fw as t using "
+            "(select 1 as sk union all select 1) as s on t.k = s.sk "
+            "when matched then update set v = 0.0",
+        )
+    assert _state(spark, "t_fw") == pre
+    assert dml._file_snapshot(path) == files
+    assert _stage_dirs(wh) == []
+    dialect.sql(spark, "drop table t_fw")
+
+
+def test_row_statement_job_counts(spark, wh):
+    """Spark jobs per row-level statement on a small partitioned table
+    — a load-independent pin on the staged write.  INSERT runs its
+    write job alone; DELETE and UPDATE add their count-and-partitions
+    aggregate (two jobs under AQE); MERGE adds its probe and the
+    broadcasts of its source.  No statement materializes its input
+    first (no localCheckpoint job)."""
+    _st_table(spark, "t_jc")
+    sc = spark.sparkContext
+    bounds = {"insert": 1, "delete": 3, "update": 3, "merge": 7}
+    for kind, stmt in _ROW_STATEMENTS.items():
+        group = f"jobcount_{kind}"
+        sc.setJobGroup(group, kind)
+        try:
+            dialect.sql(spark, stmt.format(t="t_jc"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        stages = [
+            st.getStageInfo(s)
+            for j in jobs
+            for s in st.getJobInfo(j).stageIds
+        ]
+        names = [s.name for s in stages if s is not None]
+        assert len(jobs) <= bounds[kind], (kind, len(jobs), names)
+        assert not any("localCheckpoint" in n for n in names), (kind, names)
+    dialect.sql(spark, "drop table t_jc")
+
+
+def test_emptied_partition_with_escaped_directory_name(spark, wh):
+    """A DELETE that empties a partition removes its directory even when
+    Spark's directory name differs from Python's str() of the value —
+    a timestamp (':' escaped as %3A) and a double (1.0E-7, not 1e-07).
+    A wrong name would leave the live directory, and the deleted rows,
+    in place."""
+    for t, part in (
+        ("t_ets", "timestamp '2020-01-01 10:00:00'"),
+        ("t_edb", "cast(1e-7 as double)"),
+    ):
+        dialect.sql(
+            spark,
+            f"create table {t} with (partitioned_by = array['p']) as "
+            f"select k, case when k = 1 then {part} end as p from dml_fx",
+        )
+        path = dml.table_path(spark, t)
+        assert dialect.sql(
+            spark, f"delete from {t} where p is not null"
+        ).collect()[0][0] == 1
+        assert [r[0] for r in _state(spark, t)] == [2, 3, 4, 5]
+        assert [d for d in os.listdir(path) if "=" in d] == [
+            "p=__HIVE_DEFAULT_PARTITION__"
+        ]
+        dialect.sql(spark, f"drop table {t}")

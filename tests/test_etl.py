@@ -281,12 +281,11 @@ def test_merge_apply_second_batch_applies_on_top(spark, tmp_path):
 
 def test_merge_apply_delete_empties_partition(spark, tmp_path):
     """A feed that deletes EVERY row of a partition must really remove
-    those rows: dynamic overwrite never touches a partition the
-    rewrite writes zero rows for, so merge_apply drops the emptied
-    partitions' directories explicitly (round-9 review found the
-    silent row loss; ADVICE r9 replaced the full-table-overwrite
-    fallback with the pruned DROP PARTITION path — asserted here via
-    the untouched partition's data files surviving byte-identical)."""
+    those rows: the rewrite writes zero rows for it, so the commit
+    drops the emptied partition's directory (round-9 review found the
+    silent row loss; ADVICE r9 kept the purge on the pruned path —
+    asserted here via the untouched partition's data files surviving
+    byte-identical)."""
     import os
 
     from sparketl.operators.etl import merge_apply
@@ -334,8 +333,8 @@ def test_merge_apply_delete_empties_partition(spark, tmp_path):
 
 def test_merge_apply_escaped_partition_value_falls_back(spark, tmp_path):
     """A partition value Hive path-escapes (here a space) must not be
-    string-formatted into a directory name — the purge takes the safe
-    static full overwrite and still truncates correctly."""
+    string-formatted into a directory name — the commit takes the name
+    from Spark's own renderer and still truncates correctly."""
     import os
 
     from sparketl.operators.etl import merge_apply
@@ -359,10 +358,10 @@ def test_merge_apply_escaped_partition_value_falls_back(spark, tmp_path):
 
 def test_merge_apply_delete_empties_whole_table(spark, tmp_path):
     """ADVICE r10: a feed that deletes EVERY row of EVERY partition must
-    leave a READABLE empty table — the pruned path's directory drops
-    (or the static fallback's empty partitionBy write) would otherwise
-    leave a bare root that spark.read.parquet cannot schema-infer,
-    breaking both the next read and the fixed-point re-apply."""
+    leave a READABLE empty table — dropping every partition directory
+    would otherwise leave a bare root that spark.read.parquet cannot
+    schema-infer, breaking both the next read and the fixed-point
+    re-apply."""
     from sparketl.operators.etl import merge_apply
 
     rows = [
@@ -395,8 +394,8 @@ def test_merge_apply_delete_empties_whole_table(spark, tmp_path):
 def test_merge_apply_insert_after_whole_table_purge(spark, tmp_path):
     """round-11 review: after the whole-table purge writes the
     schema-bearing root file, a later INSERT merge must not leave a
-    mixed root-file + partition-directory layout — merge_apply detects
-    root-level data files and takes the static overwrite."""
+    mixed root-file + partition-directory layout — the commit that adds
+    partitions removes the root-level data file."""
     from sparketl.operators.etl import merge_apply
 
     schema = (
